@@ -1,4 +1,4 @@
-"""Vector math as pure Column expressions (no UDFs — everything stays in
+"""Vector math as pure SQL expressions (no UDFs — everything stays in
 whole-stage codegen on the JVM).
 
 The reference computes L2 distance inside FAISS ``IndexFlatL2`` (exact brute
@@ -12,15 +12,12 @@ All helpers cast elements to double first: the source columns are
 ``array<float>`` and float-typed lambda arithmetic would accumulate float32
 rounding that diverges from any double-based oracle.
 
-Construction cost (round-13 measurement): every helper accepts either a
-``Column`` or a **SQL fragment string**. The Column path builds each lambda
-via ~40 py4j round-trips (measured 52 ms per ``l2_dist`` on this box — the
-dominant cost of whole queries that build distance expressions in loops);
-the string path assembles the identical expression as ONE ``F.expr`` parse
-(~1 ms). Both paths produce the same analyzed expression tree — same
-operations in the same order, so float results are bit-identical and the
-DuckDB oracles are untouched. Hot operators pass fragment strings; the
-Column path remains for arbitrary caller-built expressions.
+One expression path: each ``s_*`` builder takes SQL references (a column
+name, a struct field such as ``c.`emb```, or another fragment) and returns
+the fragment text, so callers compose whole expressions as strings. The
+unprefixed forms are the edge: one ``F.expr`` parse of the same fragment,
+about 1 ms, where building each lambda through py4j costs ~40 round-trips.
+A caller holding a Column aliases it and passes the name.
 """
 
 from __future__ import annotations
@@ -29,11 +26,6 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-# ---- SQL-fragment text generators (string fast path) ----
-#
-# Each s_* mirrors the Column form below TERM FOR TERM (same operations,
-# same order — float algebra must not drift between the two paths).
 
 
 def s_as_double_array(a: str) -> str:
@@ -63,16 +55,20 @@ def s_l2_dist(a: str, b: str) -> str:
 
 
 def s_cosine_sim(a: str, b: str) -> str:
+    """Cosine similarity; NULL when either norm is zero (the reference's
+    zero-vector rows for empty text, ``app_callapi.py:112``, would otherwise
+    divide by zero)."""
     denom = f"({s_l2_norm(a)} * {s_l2_norm(b)})"
     return f"CASE WHEN {denom} != 0D THEN ({s_dot(a, b)} / {denom}) END"
 
 
 def s_normalize(a: str) -> str:
+    """L2-normalize; zero vectors pass through unchanged."""
     n = s_l2_norm(a)
     return f"CASE WHEN {n} != 0D THEN transform({a}, x -> x / {n}) ELSE {a} END"
 
 
-def s_vec_lit(values: Sequence[float]) -> str:
+def vec_lit(values: Sequence[float]) -> str:
     """A literal vector as a SQL array<double> fragment. Elements go
     through CAST('<repr>' AS DOUBLE): Python float repr round-trips
     exactly, and the cast parses the same decimal string both engines
@@ -84,69 +80,29 @@ def s_vec_lit(values: Sequence[float]) -> str:
     )
 
 
-def _both_sql(*cols: Column | str) -> bool:
-    return all(isinstance(c, str) for c in cols)
+def as_double_array(a: str) -> Column:
+    return F.expr(s_as_double_array(a))
 
 
-def as_double_array(col: Column | str, sql: bool = False) -> Column | str:
-    """``sql=True`` (with a string input) returns the FRAGMENT, for callers
-    composing larger string expressions; default returns a Column."""
-    if isinstance(col, str):
-        frag = s_as_double_array(col)
-        return frag if sql else F.expr(frag)
-    return F.transform(col, lambda x: x.cast("double"))
+def dot(a: str, b: str) -> Column:
+    return F.expr(s_dot(a, b))
 
 
-def vec_lit(values: Sequence[float]) -> Column:
-    """A literal vector as an array<double> Column (one expr parse)."""
-    return F.expr(s_vec_lit(values))
+def l2_norm(a: str) -> Column:
+    return F.expr(s_l2_norm(a))
 
 
-def dot(a: Column | str, b: Column | str) -> Column:
-    if _both_sql(a, b):
-        return F.expr(s_dot(a, b))
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
+def l2_dist_sq(a: str, b: str) -> Column:
+    return F.expr(s_l2_dist_sq(a, b))
 
 
-def l2_norm(a: Column | str) -> Column:
-    if isinstance(a, str):
-        return F.expr(s_l2_norm(a))
-    return F.sqrt(dot(a, a))
+def l2_dist(a: str, b: str) -> Column:
+    return F.expr(s_l2_dist(a, b))
 
 
-def l2_dist_sq(a: Column | str, b: Column | str) -> Column:
-    if _both_sql(a, b):
-        return F.expr(s_l2_dist_sq(a, b))
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
+def cosine_sim(a: str, b: str) -> Column:
+    return F.expr(s_cosine_sim(a, b))
 
 
-def l2_dist(a: Column | str, b: Column | str) -> Column:
-    if _both_sql(a, b):
-        return F.expr(s_l2_dist(a, b))
-    return F.sqrt(l2_dist_sq(a, b))
-
-
-def cosine_sim(a: Column | str, b: Column | str) -> Column:
-    """Cosine similarity; NULL when either norm is zero (the reference's
-    zero-vector rows for empty text, ``app_callapi.py:112``, would otherwise
-    divide by zero)."""
-    if _both_sql(a, b):
-        return F.expr(s_cosine_sim(a, b))
-    denom = l2_norm(a) * l2_norm(b)
-    return F.when(denom != 0.0, dot(a, b) / denom)
-
-
-def normalize(a: Column | str) -> Column:
-    """L2-normalize; zero vectors pass through unchanged."""
-    if isinstance(a, str):
-        return F.expr(s_normalize(a))
-    n = l2_norm(a)
-    return F.when(n != 0.0, F.transform(a, lambda x: x / n)).otherwise(a)
+def normalize(a: str) -> Column:
+    return F.expr(s_normalize(a))

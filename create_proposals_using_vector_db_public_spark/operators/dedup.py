@@ -795,8 +795,27 @@ def embedding_near_dup_pairs(
     return out.distinct()
 
 
+def _sign_bits(vec_col: str, selectors: list[str]) -> str:
+    """SQL fragment: concatenated '1'/'0' signs of one ±1-weighted
+    projection of the array fragment ``vec_col`` per selector. Element i
+    counts +x when the BIGINT selector expression (over the element index
+    ``i``) is even, -x when odd. Sequential ``aggregate`` reduction — the
+    order the DuckDB mirrors replay."""
+    signs = []
+    for sel in selectors:
+        proj = (
+            f"aggregate(zip_with({vec_col}, "
+            f"sequence(0, size({vec_col}) - 1), "
+            f"(x, i) -> CASE WHEN {sel} % 2 = 0 "
+            f"THEN CAST(x AS DOUBLE) ELSE -CAST(x AS DOUBLE) END), "
+            f"0D, (acc, x) -> acc + x)"
+        )
+        signs.append(f"CASE WHEN {proj} >= 0 THEN '1' ELSE '0' END")
+    return "concat(" + ", ".join(signs) + ")"
+
+
 def hashed_hyperplane_bucket(
-    vec_col: Column | str, band: int, n_planes: int = 6
+    vec_col: str, band: int, n_planes: int = 6
 ) -> Column:
     """Pseudo-random-hyperplane LSH bucket for one band: sign bits of
     ``n_planes`` projections whose ±1 pattern per (global plane p,
@@ -809,84 +828,24 @@ def hashed_hyperplane_bucket(
     mirrored in SQL by plans.duck.d_hashed_bucket (sequential reduction,
     int64 arithmetic — bit-identical across engines).
 
-    A str ``vec_col`` (SQL fragment) takes the single-expr string path —
-    n_planes lambda constructions collapse to one parse; the fragment
-    mirrors the Column algebra term for term (functions.vectors
-    discipline)."""
-    if isinstance(vec_col, str):
-        signs = []
-        for j in range(n_planes):
-            p = band * n_planes + j
-            proj = (
-                f"aggregate(zip_with({vec_col}, "
-                f"sequence(0, size({vec_col}) - 1), "
-                f"(x, i) -> CASE WHEN CAST((CAST(i AS BIGINT) * 1103515245"
-                f" + {p * 12345}) / 65536 AS BIGINT) % 2 = 0 "
-                f"THEN CAST(x AS DOUBLE) ELSE -CAST(x AS DOUBLE) END), "
-                f"0D, (acc, x) -> acc + x)"
-            )
-            signs.append(f"CASE WHEN {proj} >= 0 THEN '1' ELSE '0' END")
-        return F.expr("concat(" + ", ".join(signs) + ")")
-    v = vec_col
-
-    def signed_term(p: int):
-        # exactly-two-arg lambda for zip_with; plane index bound via closure
-        return lambda x, i: F.when(
-            ((i.cast("long") * 1103515245 + p * 12345) / 65536).cast(
-                "bigint"
-            )
-            % 2
-            == 0,
-            x.cast("double"),
-        ).otherwise(-x.cast("double"))
-
-    signs = []
-    for j in range(n_planes):
-        p = band * n_planes + j
-        proj = F.aggregate(
-            F.zip_with(v, F.sequence(F.lit(0), F.size(v) - 1), signed_term(p)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        signs.append(F.when(proj >= 0, F.lit("1")).otherwise(F.lit("0")))
-    return F.concat(*signs)
+    ``vec_col`` is an array SQL fragment (a column name or a built
+    expression); all n_planes projections parse as one expression."""
+    return F.expr(_sign_bits(vec_col, [
+        f"CAST((CAST(i AS BIGINT) * 1103515245 + {p * 12345}) / 65536 "
+        f"AS BIGINT)"
+        for p in range(band * n_planes, (band + 1) * n_planes)
+    ]))
 
 
-def random_hyperplane_block(vec_col: Column | str, n_planes: int = 8) -> Column:
+def random_hyperplane_block(vec_col: str, n_planes: int = 8) -> Column:
     """Sign-of-projection LSH block: concatenated signs of the vector's
     first `n_planes` alternating-sum projections (deterministic, portable —
-    a fixed ±1 pattern per plane derived from element parity). A str
-    ``vec_col`` (SQL fragment) takes the one-parse string path (same
-    algebra — see hashed_hyperplane_bucket)."""
-    if isinstance(vec_col, str):
-        signs = []
-        for p in range(n_planes):
-            proj = (
-                f"aggregate(zip_with({vec_col}, "
-                f"sequence(0, size({vec_col}) - 1), "
-                f"(x, i) -> CASE WHEN CAST(i / {2 ** p} AS BIGINT) % 2 = 0 "
-                f"THEN CAST(x AS DOUBLE) ELSE -CAST(x AS DOUBLE) END), "
-                f"0D, (acc, x) -> acc + x)"
-            )
-            signs.append(f"CASE WHEN {proj} >= 0 THEN '1' ELSE '0' END")
-        return F.expr("concat(" + ", ".join(signs) + ")")
-    v = vec_col
-
-    def signed_term(p: int):
-        # exactly-two-arg lambda for zip_with; plane index bound via closure
-        return lambda x, i: F.when(
-            ((i / (2 ** p)).cast("bigint") % 2) == 0, x.cast("double")
-        ).otherwise(-x.cast("double"))
-
-    signs = []
-    for p in range(n_planes):
-        proj = F.aggregate(
-            F.zip_with(v, F.sequence(F.lit(0), F.size(v) - 1), signed_term(p)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        signs.append(F.when(proj >= 0, F.lit("1")).otherwise(F.lit("0")))
-    return F.concat(*signs)
+    a fixed ±1 pattern per plane derived from element parity).
+    ``vec_col`` is an array SQL fragment, as in
+    :func:`hashed_hyperplane_bucket`."""
+    return F.expr(_sign_bits(
+        vec_col, [f"CAST(i / {2 ** p} AS BIGINT)" for p in range(n_planes)]
+    ))
 
 
 # --- SemDeDup: within-cluster semantic dedup ---------------------------------

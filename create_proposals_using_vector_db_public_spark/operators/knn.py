@@ -25,7 +25,7 @@ from __future__ import annotations
 import logging
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -107,7 +107,7 @@ def ensure_parallelism(df: DataFrame, key: str | None = None) -> DataFrame:
 
 def knn(
     df: DataFrame,
-    query_vec: Sequence[float] | Column,
+    query_vec: Sequence[float] | str,
     k: int,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
@@ -123,25 +123,14 @@ def knn(
     interpreted array work that must not serialize onto one scan split;
     pass ``ensure=False`` when the input is known-small (a rerank
     candidate set) and the repartition would be pure overhead.
+    ``query_vec`` is a list of floats or an array<double> SQL fragment.
     """
     if ensure:
         df = ensure_parallelism(df)
-    # String fast path (see functions.vectors): a Sequence query becomes a
-    # SQL literal fragment and the distance expressions parse as ONE expr
-    # each instead of ~40 py4j lambda round-trips — same analyzed tree.
-    if isinstance(query_vec, Column):
-        emb = V.as_double_array(F.col(vec_col))
-        dist = V.l2_dist(emb, query_vec)
-        cos = V.cosine_sim(emb, query_vec)
-    else:
-        q_s = (
-            query_vec
-            if isinstance(query_vec, str)
-            else V.s_vec_lit(query_vec)
-        )
-        emb_s = V.s_as_double_array(vec_col)
-        dist = V.l2_dist(emb_s, q_s)
-        cos = V.cosine_sim(emb_s, q_s)
+    q = query_vec if isinstance(query_vec, str) else V.vec_lit(query_vec)
+    emb = V.s_as_double_array(vec_col)
+    dist = V.l2_dist(emb, q)
+    cos = V.cosine_sim(emb, q)
     if round_to is not None:
         dist = F.round(dist, round_to)
         # + 0.0 folds IEEE -0.0 (a tiny-negative cosine rounded to zero)
@@ -273,7 +262,7 @@ def ivf_assign(
 
 def lsh_search(
     corpus_df: DataFrame,
-    query_vec: Sequence[float] | Column,
+    query_vec: Sequence[float] | str,
     k: int,
     n_planes: int = 4,
     vec_col: str = "embedding",
@@ -297,11 +286,7 @@ def lsh_search(
     """
     from . import dedup as D
 
-    q: Column | str = (
-        query_vec
-        if isinstance(query_vec, (Column, str))
-        else V.s_vec_lit(query_vec)
-    )
+    q = query_vec if isinstance(query_vec, str) else V.vec_lit(query_vec)
     blocked = corpus_df.withColumn(
         "__blk",
         D.random_hyperplane_block(V.s_as_double_array(vec_col), n_planes),
@@ -492,7 +477,7 @@ def kmeans_codebook(
 
 def probe_cells(
     centroids_df: DataFrame,
-    q: Column | str,
+    q: str,
     n_probe: int,
     centroid_vec_col: str = "centroid_vec",
     centroid_id_col: str = "centroid_id",
@@ -501,12 +486,9 @@ def probe_cells(
     probe-selection step every single-query IVF variant shares (plain IVF
     and IVFPQ use this helper; the batch form in :func:`ivf_search_join`
     is the per-query-window generalization). Deterministic tie-break on
-    centroid id; NULL distances (malformed centroid vectors) sort last."""
-    qd = (
-        V.l2_dist(V.s_as_double_array(centroid_vec_col), q)
-        if isinstance(q, str)
-        else V.l2_dist(V.as_double_array(F.col(centroid_vec_col)), q)
-    )
+    centroid id; NULL distances (malformed centroid vectors) sort last.
+    ``q`` is the query as an array<double> SQL fragment."""
+    qd = V.l2_dist(V.s_as_double_array(centroid_vec_col), q)
     return (
         centroids_df.select(
             F.col(centroid_id_col),
@@ -521,7 +503,7 @@ def probe_cells(
 def ivf_search(
     corpus_df: DataFrame,
     centroids_df: DataFrame,
-    query_vec: Sequence[float] | Column,
+    query_vec: Sequence[float] | str,
     k: int,
     n_probe: int = 1,
     vec_col: str = "embedding",
@@ -534,11 +516,7 @@ def ivf_search(
     pre-assigned and partitioned by ``centroid_id`` (see :func:`ivf_assign`),
     partition pruning makes this scan ``n_probe / n_centroids`` of the data.
     """
-    q: Column | str = (
-        query_vec
-        if isinstance(query_vec, (Column, str))
-        else V.s_vec_lit(query_vec)
-    )
+    q = query_vec if isinstance(query_vec, str) else V.vec_lit(query_vec)
     assigned = ivf_assign(
         corpus_df, centroids_df, vec_col, id_col, centroid_vec_col, centroid_id_col
     )
@@ -695,7 +673,7 @@ def pq_adc_search(
     subs = pq_subvectors(corpus_df, n_sub, sub_dim, vec_col, id_col, ensure)
     codes = pq_assign(subs, codebook_df, id_col)
 
-    q_s = V.s_vec_lit(list(query_vec))
+    q_s = V.vec_lit(list(query_vec))
     dt = F.broadcast(
         codebook_df.select(
             "s", "centroid_id",
@@ -742,7 +720,7 @@ def ivfpq_search(
     exactly FAISS's IVFPQ layout. Simplification vs FAISS: codes here
     quantize raw vectors, not cell residuals; residual encoding is the
     same pipeline with (vector − centroid) fed to pq_train/pq_assign."""
-    q = V.s_vec_lit(list(query_vec))
+    q = V.vec_lit(list(query_vec))
     assigned = ivf_assign(
         corpus_df, centroids_df, vec_col, id_col, centroid_vec_col,
         centroid_id_col,

@@ -171,21 +171,25 @@ def mmr_select(
     if k < 1:
         raise ValueError(f"mmr_select needs k >= 1, got {k}")
     i, v, r = f"`{id_col}`", f"`{vec_col}`", f"`{rel_col}`"
-    sim = f"round({V.s_cosine_sim('c.' + v, 's.' + v)}, 6)"
-    # max over the selected prefix of the rounded cosine, skipping NULLs —
-    # mirrors MAX(__sim)'s NULL semantics (NULL only when every sim is NULL)
-    ms = (
-        f"aggregate(acc, CAST(NULL AS DOUBLE), (m, s) -> "
-        f"CASE WHEN {sim} IS NULL THEN m "
-        f"WHEN m IS NULL OR {sim} > m THEN {sim} ELSE m END)"
-    )
+
+    def sim(ref: str) -> str:
+        """Rounded cosine of candidate ``ref`` to selected item ``s``."""
+        return f"round({V.s_cosine_sim(f'{ref}.{v}', 's.' + v)}, 6)"
+
+    def ms(ref: str) -> str:
+        """Max over the selected prefix of ``sim(ref)``, skipping NULLs —
+        MAX(__sim)'s NULL semantics (NULL only when every sim is NULL)."""
+        return (
+            f"aggregate(acc, CAST(NULL AS DOUBLE), (m, s) -> "
+            f"CASE WHEN {sim(ref)} IS NULL THEN m "
+            f"WHEN m IS NULL OR {sim(ref)} > m THEN {sim(ref)} ELSE m END)"
+        )
 
     def sc(ref: str) -> str:
         """round(lam*rel − (1−lam)*maxsim, 6) for candidate ``ref`` — the
         exact float algebra of the pre-round-14 per-step projection
         (NULL rel or NULL maxsim both make the score NULL → skipped)."""
-        m = ms.replace("c.", f"{ref}.") if ref != "c" else ms
-        return f"round({lam!r}D * {ref}.{r} - {(1.0 - lam)!r}D * {m}, 6)"
+        return f"round({lam!r}D * {ref}.{r} - {(1.0 - lam)!r}D * {ms(ref)}, 6)"
 
     # one greedy step: argmax score over the not-yet-selected candidates,
     # as a 0-or-1-element array (empty when nothing is scoreable)

@@ -349,9 +349,8 @@ def q_query_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
     # NOT checkpointed: the three dl consumers sit on identical canonical
     # aggregate subtrees over the checkpointed postings, so exchange reuse
     # collapses their shuffles, while a checkpoint here serializes a
-    # barrier AQE otherwise overlaps (measured: checkpointed dl 5.0 s vs
-    # shared-lazy dl — see OPTIMIZATION_r14.md; same trap as the rejected
-    # q_e2e_rag subtree checkpoints in round 13).
+    # barrier AQE otherwise overlaps (measured: checkpointed dl 5.0 s;
+    # same trap as the rejected q_e2e_rag subtree checkpoints in round 13).
     dl = terms.groupBy("doc_id").agg(F.count("*").alias("dl"))
     stats = dl.agg(F.avg("dl").alias("avgdl"), F.count("*").alias("n_docs"))
     prf = (

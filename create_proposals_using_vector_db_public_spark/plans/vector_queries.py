@@ -104,7 +104,7 @@ def q_rank_l2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """rank() (gap semantics, ties share a rank) over L2 distance — R19
     generalized to a real window function."""
     emb = load_table(spark, sf_dir, "embeddings")
-    qv = V.s_vec_lit(_query_vec(spark, sf_dir, 3))
+    qv = V.vec_lit(_query_vec(spark, sf_dir, 3))
     scored = emb.select(
         "vec_id",
         F.round(V.l2_dist(V.s_as_double_array("embedding"), qv), 6).alias("dist"),
@@ -135,7 +135,7 @@ def q_vec_math(spark: SparkSession, sf_dir: str) -> DataFrame:
     """zip_with/aggregate vector arithmetic (R17/R18 building blocks) over
     the whole table — stays entirely in whole-stage codegen."""
     emb = load_table(spark, sf_dir, "embeddings")
-    qv = V.s_vec_lit(_query_vec(spark, sf_dir, 0))
+    qv = V.vec_lit(_query_vec(spark, sf_dir, 0))
     e = V.s_as_double_array("embedding")
     return emb.select(
         "vec_id",
@@ -238,7 +238,7 @@ def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrderedAndProject shape: per-partition heaps on descending cosine,
     no global sort, no vector shuffle."""
     emb = load_table(spark, sf_dir, "embeddings")
-    qv = V.s_vec_lit(_query_vec(spark, sf_dir, 42))
+    qv = V.vec_lit(_query_vec(spark, sf_dir, 42))
     scored = emb.select(
         "vec_id",
         "label",

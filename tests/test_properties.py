@@ -6,6 +6,7 @@ These guard rewrites, not behaviors: if someone "optimizes" one side
 again, the property pins it to the reference formulation.
 """
 
+import pytest
 from hypothesis import given, settings, strategies as st
 
 from pyspark.sql import functions as F
@@ -332,21 +333,14 @@ _MMR_CANDS = st.lists(
 )
 
 
-@settings(max_examples=15, deadline=None)
-@given(_MMR_CANDS)
-def test_mmr_select_equals_python_greedy(spark, cands):
-    """mmr_select must replay the greedy reference: each step picks the
-    max of round(0.5*rel - 0.5*maxsim, 6) with ties broken by id. Sims
+def _mmr_greedy(data, k, lam):
+    """Greedy MMR in plain Python over (id, vec, rel) rows → selected ids
+    in rank order. Step 1 is rel DESC NULLS LAST, id ASC; each later step
+    picks the max of round(lam*rel - (1-lam)*maxsim, 6), ties by id. Sims
     mirror cosine_sim on the raw vectors (dot/(|a||b|), rounded to 6dp);
-    a zero-norm vector yields NULL sim, which max() skips — and when ALL
-    its sims are NULL the row drops out of the argmax join entirely, so
-    the reference skips it too."""
-    lam = 0.5
-    k = min(4, len(cands))
-    data = [
-        (i, [float(x) for x in vec], rel / 100.0)
-        for i, (rel, vec) in enumerate(cands)
-    ]
+    a zero-norm vector yields a NULL sim, which max() skips. A candidate
+    with a NULL rel, or whose sims are ALL NULL, has a NULL score and is
+    skipped; a step with nothing scoreable ends the selection."""
 
     def cos(a, b):
         na, nb = math.sqrt(_dot(a, a)), math.sqrt(_dot(b, b))
@@ -354,37 +348,76 @@ def test_mmr_select_equals_python_greedy(spark, cands):
             return None
         return _r6(_dot(a, b) / (na * nb))
 
-    remaining = {i: (v, r) for i, v, r in data}
-    # (rel desc, id asc) argmax, matching the operator's tie-break
-    best = sorted(remaining, key=lambda i: (-remaining[i][1], i))[0]
-    expect = [(best, 1)]
-    selected = [best]
-    del remaining[best]
-    for step in range(2, k + 1):
-        if not remaining:
-            break
+    vec = {i: v for i, v, _ in data}
+    rel = {i: r for i, _, r in data}
+    selected = [min(rel, key=lambda i: (rel[i] is None, -(rel[i] or 0.0), i))]
+    for _ in range(2, k + 1):
         scored = {}
-        for i, (v, r) in remaining.items():
-            sims = [cos(v, dict((d[0], d[1]) for d in data)[s]) for s in selected]
+        for i in rel:
+            if i in selected or rel[i] is None:
+                continue
+            sims = [cos(vec[i], vec[s]) for s in selected]
             sims = [s for s in sims if s is not None]
-            ms = max(sims) if sims else None
-            if ms is None:
-                continue  # all-NULL sim: engine drops the row from the argmax join
-            scored[i] = _r6(lam * r - (1.0 - lam) * ms)
+            if sims:
+                scored[i] = _r6(lam * rel[i] - (1.0 - lam) * max(sims))
         if not scored:
             break
-        nxt = sorted(scored, key=lambda i: (-scored[i], i))[0]
-        expect.append((nxt, step))
-        selected.append(nxt)
-        del remaining[nxt]
+        selected.append(min(scored, key=lambda i: (-scored[i], i)))
+    return selected
+
+
+def _mmr_ranked(spark, data, k, lam):
+    """mmr_select's ids in rank order; asserts the ranks run 1..n."""
     df = spark.createDataFrame(
         data, "doc_id: long, emb: array<double>, rel: double"
     )
-    got = sorted(
-        (r["doc_id"], r["mmr_rank"])
+    rows = sorted(
+        (r["mmr_rank"], r["doc_id"])
         for r in R.mmr_select(df, k=k, lam=lam).collect()
     )
-    assert got == sorted(expect)
+    assert [n for n, _ in rows] == list(range(1, len(rows) + 1))
+    return [i for _, i in rows]
+
+
+@settings(max_examples=15, deadline=None)
+@given(_MMR_CANDS)
+def test_mmr_select_equals_python_greedy(spark, cands):
+    """mmr_select must replay the greedy reference (_mmr_greedy)."""
+    lam = 0.5
+    k = min(4, len(cands))
+    data = [
+        (i, [float(x) for x in vec], rel / 100.0)
+        for i, (rel, vec) in enumerate(cands)
+    ]
+    assert _mmr_ranked(spark, data, k, lam) == _mmr_greedy(data, k, lam)
+
+
+_MMR_EDGE_ROWS = [
+    (5, [1.0, 0.0, 0.0], 0.9),
+    (2, [1.0, 0.0, 0.0], 0.8),   # copy of 5: negative score after step 1
+    (1, [0.0, 1.0, 0.0], 0.5),   # ties 3 on the rounded score; lower id
+    (3, [0.0, 0.0, 1.0], 0.5),
+    (4, [0.0, 1.0, 1.0], None),  # NULL relevance: never scoreable
+    (6, [0.0, 0.0, 0.0], 0.7),   # zero norm: every cosine is NULL
+]
+
+
+@pytest.mark.parametrize("lam", [0.5, 0.3])
+@pytest.mark.parametrize("k", [1, 2, 4, 10])
+def test_mmr_select_edge_cases_equal_python_greedy(spark, k, lam):
+    """A tied rounded score (broken by id), a NULL relevance, a zero-norm
+    vector, k == 1, and more slots than candidates (k = 10)."""
+    got = _mmr_ranked(spark, _MMR_EDGE_ROWS, k, lam)
+    assert got == _mmr_greedy(_MMR_EDGE_ROWS, k, lam)
+    if lam == 0.5:
+        # the hand-worked walk: the 1-vs-3 tie goes to id 1, the copy of 5
+        # comes last, and ids 4 (NULL rel) and 6 (zero norm) never enter
+        assert got == [5, 1, 3, 2][:k]
+
+
+def test_mmr_select_first_pick_ties_break_by_id(spark):
+    data = [(7, [1.0, 0.0], 0.9), (4, [0.0, 1.0], 0.9), (9, [1.0, 1.0], None)]
+    assert _mmr_ranked(spark, data, 3, 0.5) == _mmr_greedy(data, 3, 0.5) == [4, 7]
 
 
 @settings(max_examples=10, deadline=None)

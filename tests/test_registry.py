@@ -60,15 +60,10 @@ def _load_from_path(modname, relpath):
     return mod
 
 
-def test_bench_and_ab_harness_queries_are_registered():
-    """bench.py's HEADLINE list and the fragment-cache A/B harness's
-    AB_QUERIES must reference registered queries only — a registry rename
-    would otherwise break the measurement tools at run time, long after
-    the rename commit."""
+def test_bench_headline_queries_are_registered():
+    """bench.py's HEADLINE list must reference registered queries only —
+    a registry rename would otherwise break the bench at run time, long
+    after the rename commit."""
     HEADLINE = _load_from_path("_bench_under_test", "bench.py").HEADLINE
-    AB_QUERIES = _load_from_path(
-        "_ab_fragment_cache_under_test", os.path.join("tools", "ab_fragment_cache.py")
-    ).AB_QUERIES
 
     assert set(HEADLINE) <= set(QUERIES), set(HEADLINE) - set(QUERIES)
-    assert set(AB_QUERIES) <= set(QUERIES), set(AB_QUERIES) - set(QUERIES)

@@ -41,3 +41,20 @@ def test_as_double_array_casts_floats(spark):
     row = df.select(V.as_double_array("emb").alias("d")).head()
     assert row["d"] == [1.5, 2.5]
     assert df.select(V.as_double_array("emb").alias("d")).schema["d"].dataType.elementType.typeName() == "double"
+
+
+def test_normalize_and_cosine_on_float_array_columns(spark):
+    # the production path: column-name fragments over array<float> input
+    df = spark.createDataFrame(
+        [(0, [3.0, 4.0], [4.0, 3.0]), (1, [0.0, 0.0], [1.0, 0.0])],
+        "id: int, a: array<float>, b: array<float>",
+    )
+    a, b = V.s_as_double_array("a"), V.s_as_double_array("b")
+    rows = df.orderBy("id").select(
+        V.normalize(a).alias("n"), V.cosine_sim(a, b).alias("c")
+    ).collect()
+    n0 = rows[0]["n"]
+    assert len(n0) == 2 and math.isclose(n0[0], 0.6) and math.isclose(n0[1], 0.8)
+    assert math.isclose(rows[0]["c"], 24.0 / 25.0)
+    # zero vector: normalize passes it through, cosine is NULL
+    assert rows[1]["n"] == [0.0, 0.0] and rows[1]["c"] is None
