@@ -92,7 +92,7 @@ def ensure_parallelism(df: DataFrame, key: str | None = None) -> DataFrame:
             # pay an unconditional extra shuffle on every guarded query.
             # The guard exists for the degenerate single-split scan; a
             # probe-less environment loses that protection, which must be
-            # observable (same discipline as the pagerank probe-miss log).
+            # observable rather than a silent swallow.
             _LOG.info(
                 "parallelism probe unavailable, leaving partitioning "
                 "as-is (%s: %s)", type(exc).__name__, exc,

@@ -37,61 +37,32 @@ the session's, set at provisioning time.
 
 from __future__ import annotations
 
-import logging
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.plan_stats import plan_size_bytes
 from ..sources import load_table
 from .registry import query
-
-_LOG = logging.getLogger(__name__)
 
 _PR_SCALE = 1_000_000
 _PR_ITERS = 3
 _TRI_MIN_W = 2
-_PR_CACHE: dict = {}
 
 
-def _same_cached_plan(prev: DataFrame, new_u: DataFrame) -> bool:
-    """True iff the previous invocation's cached edge list has the SAME
-    analyzed logical plan as the new build — the exact lookup semantics
-    Spark's CacheManager uses (canonicalized ``sameResult`` on the
-    analyzed plan), so a True here means ``new_u.cache()`` would resolve
-    to the existing entry anyway. The probe is the PUBLIC
-    ``DataFrame.sameSemantics`` developer API (classic mode: the same
-    analyzed-plan ``sameResult`` the old ``_jdf`` probe reached by hand;
-    Spark Connect: a semantic-comparison RPC, supported since 3.5 — so
-    reuse now WORKS under Connect instead of permanently missing), whose
-    docs bless exactly this false-negatives-are-fine caching use. Any
-    failure (a handle from a stopped session, a foreign test double) is
-    a miss, which routes the caller to the rebuild path where the
-    guarded eviction handles the stale handle."""
+def _plan_size_bytes(df: DataFrame) -> int | None:
+    """Catalyst's optimized-plan size estimate in bytes, None when the
+    probe is unavailable (no JVM plan handle, API drift)."""
     try:
-        return bool(prev.sameSemantics(new_u))
-    except Exception as exc:
-        # Expected misses (a test double without the method) log DEBUG;
-        # anything a REAL DataFrame raises (stopped session, API drift)
-        # logs INFO — a raising probe on every invocation would silently
-        # disable reuse, so it must leave a signal.
-        level = (
-            logging.DEBUG
-            if isinstance(exc, AttributeError)  # double without the API
-            else logging.INFO  # live handle raised: reuse may be permanently off
+        return int(
+            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
         )
-        _LOG.log(
-            level,
-            "pagerank identical-plan probe missed, rebuilding (%s: %s)",
-            type(exc).__name__, exc,
-        )
-        return False
+    except Exception:
+        return None
+
 
 # Broadcasting the |nodes|-sized rank state is the right plan while it fits
 # executor memory; past that the broadcast build itself OOMs (10^9 nodes x
 # ~24 B is tens of GB). Gate on the optimizer's size estimate of the
-# degree/state plan — the same estimate-driven guard as
-# operators.knn.ensure_parallelism. The estimate is inflated vs the true
+# degree/state plan (_plan_size_bytes). The estimate is inflated vs the true
 # state (~9x at sf10: 443 MB estimated, ~50 MB real), and 1 GiB keeps every
 # measured SF (sf0.001 32 KB -> sf10 443 MB) on the verified broadcast plan
 # while a billion-node graph (estimate in the hundreds of GB) falls back to
@@ -124,9 +95,10 @@ u AS {hint}(
 _EDGES_SQL = _IO_E_SQL.strip() + ",\n" + _U_SQL.format(hint="").strip()
 
 # MATERIALIZED variant — ONLY for the PageRank oracle, where u is referenced
-# in every unrolled iteration (the DuckDB analogue of the Spark side's
-# edge-list .cache(); without it the sf10 one-shot recomputes the self-join
-# per iteration and spills unboundedly). Keeping the hint out of the shared
+# in every unrolled iteration. DuckDB has no exchange reuse, so without the
+# hint the sf10 one-shot recomputes the self-join per iteration and spills
+# unboundedly; the Spark side gets the same once-only edge list from reusing
+# its single edge-list exchange. Keeping the hint out of the shared
 # prefix stops the triangle/degree oracles from materializing ~120M rows at
 # sf10 for a CTE they use once or never.
 _EDGES_SQL_MAT = (
@@ -193,6 +165,10 @@ def _undirected(edges: DataFrame) -> DataFrame:
     ).unionByName(edges.select(F.col("pb").alias("src"), F.col("pa").alias("dst")))
 
 
+def _degrees(u: DataFrame) -> DataFrame:
+    return u.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
+
+
 # --- degree distribution -----------------------------------------------------
 
 _DEGREE_ORACLE = f"""
@@ -256,118 +232,57 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: each iteration is one join of the edge list with the
     |nodes|-sized rank table (broadcast while the size estimate says the
     state fits executor memory — see _PR_BCAST_MAX_BYTES — else a plain
-    same-key shuffle join against the src-partitioned cached edge list)
-    plus one partial+final sum keyed by dst — the textbook
-    Pregel-on-DataFrames plan. The edge list is computed once and cached;
-    iterations reuse it, and a repeat invocation with the identical
-    logical plan (same session/SF/mode) reuses the materialized cache
-    instead of rebuilding from parquet."""
+    same-key shuffle join against the src-partitioned edge list) plus one
+    partial+final sum keyed by dst — the textbook Pregel-on-DataFrames
+    plan. The builder is pure: it fires no job beyond the parquet schema
+    read and keeps nothing between calls. The edge list is hash-partitioned
+    by ONE exchange; every iteration's reference to it is the same
+    subtree, so Spark's exchange reuse computes it once per execution."""
     edges = _edges(spark, sf_dir)
     # Decide the per-iteration join strategy ONCE, from the degree-table
     # plan's own size estimate (the rank state has identical cardinality
     # and ~24 B rows every iteration).
-    est = plan_size_bytes(
-        _undirected(edges).groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    )
+    est = _plan_size_bytes(_degrees(_undirected(edges)))
     # Unavailable estimate -> KEEP the historical broadcast plan (verified
     # fastest at every measured SF); only a confirmed over-limit estimate
     # flips to the shuffle join. The fallback exists for graphs proven too
     # big to broadcast, not for probe hiccups on small ones.
     bcast_state = est is None or est <= _PR_BCAST_MAX_BYTES
-    # Hash-partition the cached edge list ONCE, on the key each mode reuses
-    # every iteration: broadcast mode groups contributions by dst, so a
-    # dst-partitioned cache makes the per-iteration exchange of the full
-    # edge-sized (dst, contrib) stream disappear (measured ~20% at sf0.1);
-    # shuffle mode joins on src, so a src-partitioned cache lets the join
-    # reuse the cached partitioning and only the state side plus the
-    # narrow (dst, c) longs move per iteration — the
+    # Hash-partition the edge list ONCE, on the key each mode reuses every
+    # iteration: broadcast mode groups contributions by dst, so a
+    # dst-partitioned edge list makes the per-iteration exchange of the
+    # full edge-sized (dst, contrib) stream disappear (measured ~20% at
+    # sf0.1); shuffle mode joins on src, so a src-partitioned edge list
+    # lets the join reuse that partitioning and only the state side plus
+    # the narrow (dst, c) longs move per iteration — the
     # reuse-a-partitioning-across-stages discipline either way.
     part_key = "dst" if bcast_state else "src"
     try:
         n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        new_u = _undirected(edges).repartition(n_part, part_key)
+        u = _undirected(edges).repartition(n_part, part_key)
     except ValueError:  # conf may be non-numeric ("auto" on some platforms)
-        new_u = _undirected(edges).repartition(part_key)
-    # scope the cache: at most ONE pagerank edge-list entry is ever
-    # resident. When the incoming logical plan equals the cached handle's
-    # plan (same session, same sf_dir, same join mode, same partitioning),
-    # REUSE the already-materialized entry — CacheManager keys entries by
-    # canonicalized plan, so re-calling cache() would resolve to the same
-    # entry anyway, and the old evict+recache dance threw away the
-    # cross-invocation warm start (the second bench pass re-built the edge
-    # list from parquet every time). Any other plan — different SF,
-    # flipped broadcast/shuffle gate, new session — evicts the previous
-    # entry BEFORE caching the new one, keeping the one-entry budget.
-    prev = _PR_CACHE.get("u")
-    prev_session = _PR_CACHE.get("session")
-    reused = (
-        prev is not None
-        and prev_session is spark
-        and _same_cached_plan(prev, new_u)
-    )
-    if reused:
-        u = prev
-    else:
-        if prev is not None:
-            try:
-                prev.unpersist(blocking=False)
-            except Exception as exc:
-                if prev_session is spark:
-                    # the owning session is demonstrably alive — a failed
-                    # eviction here would leave TWO entries resident, so
-                    # surface it instead of silently eating the budget
-                    _LOG.warning(
-                        "pagerank edge-cache eviction failed on a live "
-                        "session (cache budget may be exceeded): %s", exc,
-                    )
-                # else: the handle came from a stopped session — its
-                # blocks died with the session, nothing to evict, and the
-                # stale handle must not poison the new session's run
-        u = new_u.cache()
-    _PR_CACHE["u"] = u
-    _PR_CACHE["session"] = spark
-    # record the decisions (and whether the probe resolved) so tests can
-    # assert the gate genuinely flipped / the reuse genuinely hit rather
-    # than silently re-running some other path
-    _PR_CACHE["mode"] = "broadcast" if bcast_state else "shuffle"
-    _PR_CACHE["est"] = est
-    _PR_CACHE["reused"] = reused
-    # The |nodes|-sized degree table is referenced by the initial state
-    # AND by every iteration's left join — without a checkpoint each
-    # reference re-aggregates the full cached edge list (one exchange +
-    # agg over 2|E| rows, 4x per invocation). The lazy localCheckpoint
-    # materializes it once per invocation (round-13 A/B on an idle box:
-    # 2.50 s -> 1.89 s fresh build+count, hash-identical); at scale this
-    # is the standard cache-the-static-degrees move of every iterative
-    # PageRank.
-    d = u.groupBy("src").agg(F.count(F.lit(1)).alias("deg")).localCheckpoint(
-        eager=False
-    )
-    state = d.select(
+        u = _undirected(edges).repartition(part_key)
+    state = _degrees(u).select(
         F.col("src").alias("node"), "deg", F.lit(_PR_SCALE).cast("bigint").alias("r")
     )
     for _ in range(_PR_ITERS):
         # rank state is |nodes|-sized — broadcast it (so the much larger
-        # edge table never re-shuffles; the only exchange per iteration is
-        # the partial+final contribution sum keyed by dst) while the gate
-        # above says it fits; past the gate, plain-join against the
-        # src-partitioned cache instead of OOMing the broadcast build
-        contrib = (
+        # edge table never re-shuffles, and being dst-partitioned it needs
+        # no exchange for the per-dst sum either) while the gate above
+        # says it fits; past the gate, plain-join against the
+        # src-partitioned edge list instead of OOMing the broadcast build.
+        # u holds both directions of every edge and every node has one, so
+        # node x's dst group has exactly deg(x) rows: the group's count IS
+        # the degree, and every node gets a row — the oracle's left join
+        # back to the degree table adds nothing here.
+        state = (
             u.join(F.broadcast(state) if bcast_state else state,
                    u.src == state.node)
-            .select("dst", F.expr("r div deg").alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("contrib"))
-        )
-        state = (
-            d.join(contrib, d.src == contrib.dst, "left")
-            .select(
-                F.col("src").alias("node"),
-                "deg",
-                (
-                    F.lit(150_000)
-                    + F.expr("(85 * coalesce(contrib, 0L)) div 100")
-                ).cast("bigint").alias("r"),
+            .groupBy(F.col("dst").alias("node"))
+            .agg(
+                F.count(F.lit(1)).alias("deg"),
+                (F.lit(150_000) + F.expr("(85 * sum(r div deg)) div 100"))
+                .cast("bigint").alias("r"),
             )
         )
     return (

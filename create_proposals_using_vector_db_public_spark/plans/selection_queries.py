@@ -231,11 +231,12 @@ def q_temperature_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     diverge in the last ulp across libm implementations (the same
     engine-drift class the integer moment algebra elsewhere avoids).
 
-    Scale shape: the rate table is |languages| rows, computed ONCE (lazy
-    localCheckpoint — without it Catalyst re-expands the counts+min
-    subtree into every consumer and the corpus is scanned four times;
-    with it, exactly two passes: one for the counts, one for the keep
-    filter) and broadcast into the keep pass. The keep decision is a
+    Scale shape: the rate table is |languages| rows, broadcast into the
+    keep pass. It stays a lazy plan: the n_min aggregate reuses the count
+    exchange, and both rate-table consumers reuse the n_min broadcast.
+    The keep join's inferred lang IS NOT NULL filter gives the broadcast
+    copy its own counts pass (a lang-only column read), so the corpus is
+    read three times, the keep pass included. The keep decision is a
     narrow per-row hash filter, and the output is one partial+final
     count per language — no shuffle of document rows at all."""
     d = load_table(spark, sf_dir, "documents").select("doc_id", "lang")
@@ -247,7 +248,7 @@ def q_temperature_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(
             F.sqrt(F.col("n_min").cast("double") / F.col("n_docs")) * _TS_D
         ).cast("bigint").alias("rate6"),
-    ).localCheckpoint(eager=False)
+    )
     keep = h64(F.col("doc_id").cast("string"), seed="temp") % _TS_D
     kept = (
         d.join(F.broadcast(rates.select("lang", "rate6")), "lang")

@@ -2,7 +2,6 @@
 integer PageRank against a hand-computed fixture, canonical-orientation
 triangle counting, and the degree/edge-build invariants."""
 
-import logging
 import os
 
 import pyspark.sql.functions as F
@@ -62,183 +61,43 @@ def test_integer_pagerank_matches_reference_loop(spark):
 SF = "/root/testdata/sf0.001"
 
 
+def _initial_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
 @pytest.mark.skipif(not os.path.isdir(SF), reason="driver testdata absent")
 def test_pagerank_shuffle_fallback_matches_broadcast(spark, monkeypatch):
     """The size-gated state join: below _PR_BCAST_MAX_BYTES the state
     broadcasts (the verified default at every measured SF); forcing the
     gate to 0 must take the plain shuffled-join path — the one a
     billion-node graph needs instead of an OOMing broadcast build — and
-    the scaled-integer ranks must be bit-identical either way."""
-    want = [tuple(r) for r in q_pagerank(spark, SF).collect()]
-    assert graph_queries._PR_CACHE["mode"] == "broadcast"
+    the scaled-integer ranks must be bit-identical either way. The mode is
+    read from the physical plan with the planner's own size-based
+    broadcast switched off, so the query's hint is the only possible
+    source of a BroadcastHashJoin."""
     # the gate must be decidable on this fixture: an unresolved Catalyst
-    # size probe (est None) keeps broadcast regardless of the limit, which
-    # would make the monkeypatched run below compare broadcast against
-    # itself — fail here instead of passing vacuously
-    assert graph_queries._PR_CACHE["est"] is not None
-    monkeypatch.setattr(graph_queries, "_PR_BCAST_MAX_BYTES", 0)
-    got = [tuple(r) for r in q_pagerank(spark, SF).collect()]
-    # the decision actually flipped: this run exercised the shuffle join
-    assert graph_queries._PR_CACHE["mode"] == "shuffle"
+    # size probe (None) keeps broadcast regardless of the limit, which
+    # would make the fallback run below compare broadcast against itself
+    est = graph_queries._plan_size_bytes(
+        graph_queries._degrees(_undirected(graph_queries._edges(spark, SF)))
+    )
+    assert est is not None
+    want = [tuple(r) for r in q_pagerank(spark, SF).collect()]
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        assert "BroadcastHashJoin" in _initial_plan(q_pagerank(spark, SF))
+        monkeypatch.setattr(graph_queries, "_PR_BCAST_MAX_BYTES", 0)
+        fallback = q_pagerank(spark, SF)
+        # the decision actually flipped: this run exercises the shuffle join
+        assert "BroadcastHashJoin" not in _initial_plan(fallback)
+        got = [tuple(r) for r in fallback.collect()]
+    finally:
+        spark.conf.set(key, prev)
     assert got == want
     # sanity: the fixture graph genuinely ranks (not an empty result)
     assert len(got) == 20
-
-
-@pytest.mark.skipif(not os.path.isdir(SF), reason="driver testdata absent")
-def test_pagerank_repeat_invocation_stays_cached(spark):
-    """CacheManager keys cache entries by logical plan, so the previous
-    invocation's entry IS the new one's when the mode repeats. The old
-    cache-then-evict order no-opped the cache and then removed the shared
-    entry — every repeated same-session q_pagerank ran uncached. Pin the
-    fix: the SECOND invocation's plan must still read the edge list from
-    InMemoryRelation, and its ranks must match the first's."""
-    first = [tuple(r) for r in q_pagerank(spark, SF).collect()]
-    again = q_pagerank(spark, SF)
-    plan = again._jdf.queryExecution().executedPlan().toString()
-    assert "InMemoryTableScan" in plan or "InMemoryRelation" in plan, (
-        "repeat invocation lost the edge-list cache (evict-after-cache "
-        "regression)"
-    )
-    assert [tuple(r) for r in again.collect()] == first
-
-
-@pytest.mark.skipif(not os.path.isdir(SF), reason="driver testdata absent")
-def test_pagerank_identical_plan_reuses_cache(spark):
-    """A repeat invocation whose logical plan equals the cached handle's
-    (same session, same SF, same mode) must REUSE the materialized entry
-    — not evict+recache, which would rebuild the edge list from parquet
-    and forfeit the cross-invocation warm start the bench's second pass
-    relies on. The _PR_CACHE bookkeeping pins which path ran."""
-    first = [tuple(r) for r in q_pagerank(spark, SF).collect()]
-    cached = graph_queries._PR_CACHE["u"]
-    again = q_pagerank(spark, SF)
-    assert graph_queries._PR_CACHE["reused"] is True
-    # the SAME cached DataFrame handle, not a fresh cache() of a new plan
-    assert graph_queries._PR_CACHE["u"] is cached
-    assert [tuple(r) for r in again.collect()] == first
-    # a different SF is a different plan — the reuse must NOT fire there
-    sf2 = "/root/testdata/sf0.01"
-    if os.path.isdir(sf2):
-        q_pagerank(spark, sf2)
-        assert graph_queries._PR_CACHE["reused"] is False
-        assert graph_queries._PR_CACHE["u"] is not cached
-
-
-@pytest.mark.skipif(not os.path.isdir(SF), reason="driver testdata absent")
-def test_pagerank_survives_stale_cache_from_dead_session(spark):
-    """q_pagerank evicts the previous invocation's cached edge list; if
-    that handle came from a SparkSession that has since been STOPPED,
-    unpersist raises (dead driver endpoint) — the eviction must swallow
-    that SILENTLY (no live-session warning: the blocks died with the
-    session) and proceed, or a session restart poisons every later run."""
-
-    class _DeadHandle:
-        def unpersist(self, blocking=False):
-            raise RuntimeError("driverEndpoint() is null (session stopped)")
-
-    # a dead-session handle: the owning session is NOT the current one
-    graph_queries._PR_CACHE["u"] = _DeadHandle()
-    graph_queries._PR_CACHE["session"] = object()
-    got = q_pagerank(spark, SF).collect()
-    assert len(got) == 20
-    # the stale handle was replaced by the new run's live cache
-    assert not isinstance(graph_queries._PR_CACHE["u"], _DeadHandle)
-    assert graph_queries._PR_CACHE["reused"] is False
-
-
-@pytest.mark.skipif(not os.path.isdir(SF), reason="driver testdata absent")
-def test_pagerank_live_session_eviction_failure_is_logged(spark, caplog):
-    """Counterpart to the dead-session test: when the handle's owning
-    session IS the current live session and unpersist still fails, the
-    one-entry cache budget may genuinely be exceeded — that must surface
-    as a warning, not vanish into the dead-session swallow path."""
-
-    class _FailingHandle:
-        def unpersist(self, blocking=False):
-            raise RuntimeError("executor refused to drop blocks")
-
-    graph_queries._PR_CACHE["u"] = _FailingHandle()
-    graph_queries._PR_CACHE["session"] = spark  # demonstrably alive
-    with caplog.at_level("WARNING", logger=graph_queries.__name__):
-        got = q_pagerank(spark, SF).collect()
-    assert len(got) == 20
-    assert any(
-        "eviction failed on a live session" in rec.message
-        for rec in caplog.records
-    ), "live-session eviction failure was swallowed silently"
-
-
-@pytest.mark.skipif(not os.path.isdir(SF), reason="driver testdata absent")
-def test_pagerank_probe_miss_is_observable(spark, caplog):
-    """The identical-plan probe uses the public `sameSemantics` API;
-    if the probe RAISES on every invocation (API drift, a stopped
-    session) the except branch would disable reuse on EVERY call. That
-    must be observable, not a bare swallow: an expected miss (a handle
-    without the method — a test double) logs at DEBUG, while a handle
-    whose probe call explodes logs at INFO, so a permanently-dead reuse
-    path leaves a signal. Both still return False (rebuild path)."""
-
-    class _NoBridge:  # AttributeError on .sameSemantics → expected-miss arm
-        pass
-
-    class _RaisingBridge:  # method present but the call explodes → INFO arm
-        def sameSemantics(self, other):
-            raise RuntimeError("py4j bridge gone")
-
-    real = q_pagerank(spark, SF)  # any live DataFrame as the other side
-    with caplog.at_level("DEBUG", logger=graph_queries.__name__):
-        assert graph_queries._same_cached_plan(_NoBridge(), real) is False
-        assert graph_queries._same_cached_plan(_RaisingBridge(), real) is False
-    misses = [r for r in caplog.records if "identical-plan probe" in r.message]
-    assert [r.levelname for r in misses] == ["DEBUG", "INFO"], (
-        "probe misses must log (expected=DEBUG, unexpected=INFO), got "
-        f"{[(r.levelname, r.message) for r in misses]}"
-    )
-
-
-@pytest.mark.skipif(not os.path.isdir(SF), reason="driver testdata absent")
-def test_pagerank_bridgeless_session_degrades_to_correct_rebuild(spark, caplog):
-    """End-to-end pin of the probe-degradation mode: when the CACHED
-    handle's `sameSemantics` call raises a non-AttributeError (a live
-    object whose probe call explodes — stopped-session py4j errors, or
-    API drift), a full q_pagerank invocation must (a) take the rebuild
-    path and still return the exact ranks, and (b) fire the INFO-level
-    probe-miss log — at INFO specifically, so a refactor can't silently
-    demote the permanently-disabled-reuse signal to DEBUG. Complements
-    test_pagerank_probe_miss_is_observable, which pins _same_cached_plan
-    in isolation rather than through the query."""
-
-    expected = [tuple(r) for r in q_pagerank(spark, SF).collect()]
-    inner = graph_queries._PR_CACHE["u"]  # the live cached edge list
-
-    class _ConnectLikeHandle:
-        """Probe method present but every call raises — NOT AttributeError."""
-
-        def sameSemantics(self, other):
-            raise RuntimeError("semantic comparison unavailable")
-
-        def unpersist(self, blocking=False):
-            # delegate: the rebuild path evicts the previous entry, and the
-            # real blocks behind this proxy must actually be released
-            return inner.unpersist(blocking=blocking)
-
-    graph_queries._PR_CACHE["u"] = _ConnectLikeHandle()
-    graph_queries._PR_CACHE["session"] = spark
-    with caplog.at_level(logging.INFO, logger=graph_queries.__name__):
-        got = [tuple(r) for r in q_pagerank(spark, SF).collect()]
-    assert got == expected, "bridge-less rebuild path changed the ranks"
-    assert graph_queries._PR_CACHE["reused"] is False
-    assert not isinstance(graph_queries._PR_CACHE["u"], _ConnectLikeHandle)
-    info_misses = [
-        r
-        for r in caplog.records
-        if "identical-plan probe" in r.message and r.levelno == logging.INFO
-    ]
-    assert info_misses, (
-        "a live-bridge probe failure inside q_pagerank must log at INFO "
-        f"(got only: {[(r.levelname, r.message) for r in caplog.records]})"
-    )
 
 
 def test_triangle_canonical_orientation_counts_once(spark):

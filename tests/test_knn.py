@@ -189,16 +189,16 @@ def test_ensure_parallelism_probeless_degrades_observably(spark, caplog):
     """When NEITHER partition probe exists (Spark Connect exposes neither
     `_jdf` nor `.rdd`), the guard must return the input unchanged — no
     unconditional shuffle on every guarded query — and log the lost
-    protection at INFO, the same observability discipline as the
-    pagerank probe-miss log."""
+    protection at INFO, so a fallback that fires on every call is
+    observable."""
     import logging
 
     from create_proposals_using_vector_db_public_spark.operators import knn
 
     class _ProbelessFrame:
-        """Quacks enough of a big DataFrame for the guard's path: size
-        estimate unavailable (plan_size_bytes -> None via raising _jdf),
-        session conf present, but no working partition probe."""
+        """Quacks enough of a DataFrame for the guard's path: session
+        conf present, but no working partition probe (``_jdf`` and
+        ``rdd`` both raise)."""
 
         def __init__(self, session):
             self.sparkSession = session

@@ -19,7 +19,7 @@ Captures TWO artifact kinds:
 
 Usage:
   python tools/explain.py                      # all queries: txt + signatures
-  python tools/explain.py SF_DIR q_a q_b ...   # subset, txt only
+  python tools/explain.py SF_DIR q_a q_b ...   # subset: txt + merged signatures
 """
 
 from __future__ import annotations
@@ -44,31 +44,7 @@ _NODE = re.compile(r"^\(\d+\) ([A-Za-z][\w .]*?)\s*(?:\[codegen id : \d+\])?$",
                    re.M)
 
 
-def _reset_memo_state() -> None:
-    """Signatures pin the canonical FIRST-invocation plan. q_pagerank
-    memoizes its cached edge list across identical-plan invocations
-    (round 7), and a REUSED handle renders with the materialized cache's
-    runtime nodes (ShuffleQueryStage/AQEShuffleRead) instead of the
-    fresh plan — so capture must start from a cold memo or the signature
-    would depend on whatever ran earlier in the session (e.g. the graph
-    tests in a full pytest run)."""
-    from create_proposals_using_vector_db_public_spark.plans import (
-        graph_queries as GQ,
-    )
-
-    prev = GQ._PR_CACHE.get("u")
-    GQ._PR_CACHE.clear()  # ALL bookkeeping (u/session/mode/est/reused):
-    # a half-reset memo would leave stale mode/est entries readable
-    # before the next q_pagerank invocation overwrites them
-    if prev is not None:
-        try:
-            prev.unpersist(blocking=False)
-        except Exception:
-            pass  # stopped-session handle: blocks already gone
-
-
 def plan_text(spark, name: str, sf_dir: str) -> str:
-    _reset_memo_state()
     buf = io.StringIO()
     with redirect_stdout(buf):
         QUERIES[name](spark, sf_dir).explain("formatted")
@@ -86,21 +62,23 @@ def signature(plan: str) -> list[str]:
 def main() -> None:
     txt_sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     names = sys.argv[2:] or list(QUERIES)
-    full_capture = not sys.argv[2:]
     os.makedirs(OUT_DIR, exist_ok=True)
-    spark = get_spark("explain", shuffle_partitions=8)
+    # a subset capture merges its entries into the existing pins, so
+    # re-capturing one query never rewrites the other queries' signatures
     sigs: dict[str, list[str]] = {}
+    if sys.argv[2:] and os.path.isfile(SIG_PATH):
+        with open(SIG_PATH) as f:
+            sigs = json.load(f)["signatures"]
+    spark = get_spark("explain", shuffle_partitions=8)
     for name in names:
         with open(os.path.join(OUT_DIR, f"{name}.txt"), "w") as f:
             f.write(plan_text(spark, name, txt_sf))
-        if full_capture:
-            sigs[name] = signature(plan_text(spark, name, SIG_SF))
+        sigs[name] = signature(plan_text(spark, name, SIG_SF))
         print(f"wrote {name}")
-    if full_capture:
-        with open(SIG_PATH, "w") as f:
-            json.dump({"sf_dir": SIG_SF, "signatures": sigs}, f, indent=0,
-                      sort_keys=True)
-        print(f"wrote {len(sigs)} signatures -> {SIG_PATH}")
+    with open(SIG_PATH, "w") as f:
+        json.dump({"sf_dir": SIG_SF, "signatures": sigs}, f, indent=0,
+                  sort_keys=True)
+    print(f"wrote {len(names)} of {len(sigs)} signatures -> {SIG_PATH}")
     spark.stop()
 
 
