@@ -35,9 +35,11 @@ _LOG = logging.getLogger(__name__)
 
 
 def ensure_parallelism(df: DataFrame, key: str | None = None) -> DataFrame:
-    """Repartition ``df`` up to the session's shuffle parallelism when its
-    plan has fewer partitions — round-robin by default, hash-partitioned
-    on ``key`` when given.
+    """Repartition ``df`` when its plan has fewer partitions than the
+    session has task slots (``sparkContext.defaultParallelism``: the cores
+    of ``local[N]``, the executor cores of a cluster) — round-robin into
+    one partition per slot by default, hash-partitioned on ``key`` into
+    ``spark.sql.shuffle.partitions`` when ``key`` is given.
 
     Pass ``key`` when the caller's next wide operator groups by ``key``
     (or a superset of it): hash partitioning on a grouping-key subset
@@ -47,9 +49,17 @@ def ensure_parallelism(df: DataFrame, key: str | None = None) -> DataFrame:
     (its argmin groupBy is on the id) and ``pq_subvectors`` likewise (the
     codeword argmin groups by (id, s), and the downstream ADC aggregate by
     id — all satisfied by hash(id), so the whole PQ encode pipeline runs
-    in the one guard exchange). A unique id hashes uniformly, so the
-    keyed form keeps round-robin's balance without its per-task
-    sort-before-repartition pass.
+    in the one guard exchange). The keyed exchange stands in for a
+    shuffle, so it takes the shuffle's partition count, not the slot
+    count: a join of the guarded side against another side shuffled on
+    the same key stays co-partitioned only at equal counts (sized by
+    slots, SemDeDup's anti join re-shuffled its other side to match — one
+    Exchange more in each q_semdedup plan). ``key`` must be unique or
+    nearly so: the keyed form is balanced only because a unique id hashes
+    uniformly; a skewed or low-cardinality key would pile rows onto a few
+    partitions and bring back the straggler the guard exists to remove.
+    With a unique key it keeps round-robin's balance without round-robin's
+    per-task sort-before-repartition pass.
 
     Vector operators are compute-dense but byte-light (k interpreted
     array distances per row over a few-hundred-byte row), so their map
@@ -61,21 +71,22 @@ def ensure_parallelism(df: DataFrame, key: str | None = None) -> DataFrame:
     corpus already has more splits than cores) and the shuffle it adds
     moves each row once.
 
-    Round 13 removed the old 4MB optimizer-size floor: bytes are the
-    wrong proxy for compute-dense work (the floor kept every sub-4MB
-    vector table — including the sf0.1 bench corpus — serialized on one
-    core; firing the guard there measured q_semdedup 3.28 s -> 2.94 s
+    The round-robin target is the task slots, not
+    ``spark.sql.shuffle.partitions``: that exchange exists only to occupy
+    every core, and more partitions than cores only adds tasks. Sized by
+    the shuffle setting (32), a 1-split sf0.05 corpus became 32 tasks of
+    ~30 vectors each on 2 task threads, about half of ``q_knn``'s execute
+    time (4-core VM).
+
+    Bytes are the wrong proxy for compute-dense work, so there is no size
+    floor (an old 4MB floor kept every sub-4MB vector table serialized on
+    one core; firing the guard there measured q_semdedup 3.28 s -> 2.94 s
     while the added exchange on genuinely tiny inputs costs ~0.05 s).
     Skipping the optimizer-stats probe also removes a per-invocation
     driver-side optimization pass on the guarded subtree. The loops that
     must not re-pay the exchange per iteration already pass
-    ``ensure=False`` and guard once outside (kmeans_codebook), which is
-    what the historical 1.7x q_ann_ivf_kmeans regression — the original
-    motivation for the floor — actually came from.
+    ``ensure=False`` and guard once outside (kmeans_codebook).
     """
-    shuffle_n = int(
-        df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    )
     # partition count from the plan's own physical RDD: df.rdd would wrap
     # the plan in a DeserializeToObject projection and re-run analysis per
     # guarded query just to ask a partition count (the guarded inputs are
@@ -98,11 +109,14 @@ def ensure_parallelism(df: DataFrame, key: str | None = None) -> DataFrame:
                 "as-is (%s: %s)", type(exc).__name__, exc,
             )
             return df
-    if n_part < shuffle_n:
-        if key is not None:
-            return df.repartition(shuffle_n, key)
-        return df.repartition(shuffle_n)
-    return df
+    spark = df.sparkSession
+    slots = spark.sparkContext.defaultParallelism
+    if n_part >= slots:
+        return df
+    if key is not None:
+        shuffle_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        return df.repartition(shuffle_n, key)
+    return df.repartition(slots)
 
 
 def knn(

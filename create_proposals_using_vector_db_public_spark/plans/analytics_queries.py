@@ -15,7 +15,7 @@ from pyspark.sql.window import Window
 
 from ..functions import text as T
 from ..functions.hashing import d_h64, h64
-from ..sources import load_table
+from ..sources import load_table, read_parquet
 from .duck import d_words
 from ..functions.money import money_double
 from .registry import query
@@ -524,7 +524,7 @@ def q_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     shutil.rmtree(out_dir, ignore_errors=True)
     d.write.mode("overwrite").partitionBy("lang").parquet(out_dir)
-    back = spark.read.parquet(out_dir)
+    back = read_parquet(spark, out_dir)
     return back.groupBy("lang").agg(
         F.count("*").alias("cnt"),
         F.sum("n_chars").alias("total_chars"),

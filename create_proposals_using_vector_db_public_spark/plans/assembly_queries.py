@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from ..functions import hashing as H
 from ..functions import text as T
 from ..functions.hashing import d_h64
+from ..operators.knn import ensure_parallelism
 from ..sources import load_table
 from .duck import d_words
 from .plant import (PLANT_COPY_OFFSET, PLANT_DECON_OFFSET,
@@ -108,11 +109,9 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(F.lit(_DECON_PREFIX), F.col("text")).alias("text"),
     )
     # Train side: single-file fixture → spread the CPU-bound gram/hash
-    # work across cores (a 100 TB table's many input splits make this a
-    # no-op on a real cluster).
-    train = raw.repartition(
-        spark.sparkContext.defaultParallelism
-    ).unionByName(planted)
+    # work across cores (a 100 TB table's many input splits make the guard
+    # a no-op on a real cluster).
+    train = ensure_parallelism(raw).unionByName(planted)
 
     bg = (
         _grams(bench, _DECON_N)

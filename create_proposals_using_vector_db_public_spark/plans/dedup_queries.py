@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from ..functions import text as T
 from ..operators import dedup as D
+from ..operators.knn import ensure_parallelism
 from ..sources import load_table
 from .duck import d_cosine, d_dot, d_hashed_bucket, d_normalize, dd, d_words
 from .plant import PLANT_COPY_OFFSET, PLANT_NEAR_OFFSET, assert_plantable
@@ -44,12 +45,10 @@ def _corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The fixture is one small parquet file (1-3 input splits), but the
     # dedup passes are CPU-bound string/hash work — spread rows across all
     # cores. On a real cluster the many input files of a 100 TB table give
-    # this parallelism for free and the repartition would be dropped.
+    # this parallelism for free and the guard adds no repartition.
     assert_plantable(sf_dir)
-    d = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism)
+    d = ensure_parallelism(
+        load_table(spark, sf_dir, "documents").select("doc_id", "text")
     )
     copies = d.filter(F.col("doc_id") % 50 == 0).select(
         (F.col("doc_id") + PLANT_COPY_OFFSET).alias("doc_id"), "text"

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.money import money_double, revenue_decimal
-from ..sources import load_table
+from ..sources import load_table, read_parquet
 from .registry import query
 
 # --- CDC apply (last-writer-wins) --------------------------------------------
@@ -218,8 +218,8 @@ def q_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pathological layout: 64 tiny files
     src.repartition(64).write.mode("overwrite").parquet(small)
     # compaction: no shuffle — AQE-style partition merge down to 2 files
-    spark.read.parquet(small).coalesce(2).write.mode("overwrite").parquet(big)
-    compacted = spark.read.parquet(big)
+    read_parquet(spark, small).coalesce(2).write.mode("overwrite").parquet(big)
+    compacted = read_parquet(spark, big)
     # mod BEFORE the multiply: keeps the scaled product under 2^63 at any
     # orderkey magnitude (the raw multiply overflows bigint past SF ~580).
     # XOR-fold, not sum: a BIGINT sum of 31-bit row hashes overflows past

@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 from ..functions.hashing import d_h64, h64
 from ..functions import vectors as V
 from ..functions.money import money_double
-from ..sources import load_table
+from ..sources import load_table, read_parquet
 from .duck import dd
 from .registry import query
 
@@ -189,7 +189,7 @@ def q_partitioned_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         "events_by_type",
     )
     ev.write.mode("overwrite").partitionBy("event_type").parquet(path)
-    back = spark.read.parquet(path).filter(
+    back = read_parquet(spark, path).filter(
         F.col("event_type").isin("click", "purchase")
     )
     return back.groupBy("event_type").agg(

@@ -22,7 +22,7 @@ from pyspark.sql.types import (
 )
 
 from ..functions.money import money_double
-from ..sources.tables import load_events
+from ..sources.tables import load_events, read_parquet
 from ..streaming import available_now_to_memory, stream_parquet, watermark_dedup
 from .registry import query
 
@@ -79,7 +79,7 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Probe the batch reader once to learn this Spark's nanos mapping;
     # load_events also pins the UTC session timezone + legacy conf.
     load_events(spark, sf_dir)
-    batch = spark.read.parquet(f"{sf_dir}/events.parquet")
+    batch = read_parquet(spark, f"{sf_dir}/events.parquet")
     ts_type = dict(batch.dtypes)["ts"]
     raw = stream_parquet(spark, stage, _events_schema(ts_type))
     if ts_type == "bigint":

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from ..operators import ingest as I
+from ..sources import read_parquet
 
 
 def stream_parquet(
@@ -169,7 +170,7 @@ def read_versioned(spark, table_dir: str) -> DataFrame | None:
     v = _current_version(spark, table_dir)
     if v < 0:
         return None
-    return spark.read.parquet(os.path.join(table_dir, f"v{v}"))
+    return read_parquet(spark, os.path.join(table_dir, f"v{v}"))
 
 
 def read_versioned_as_of(spark, table_dir: str, version: int) -> DataFrame:
@@ -191,7 +192,7 @@ def read_versioned_as_of(spark, table_dir: str, version: int) -> DataFrame:
             f"(CURRENT={cur}; retained snapshots only — vacuumed or "
             "never-written versions cannot be read)"
         )
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)
 
 
 def commit_version(
@@ -224,7 +225,7 @@ def commit_version(
     cur = (
         None
         if cur_v < 0
-        else spark.read.parquet(os.path.join(table_dir, f"v{cur_v}"))
+        else read_parquet(spark, os.path.join(table_dir, f"v{cur_v}"))
     )
     merged = (
         batch_df

@@ -13,3 +13,20 @@ def spark():
     s = get_spark("tests", shuffle_partitions=4, master="local[4]")
     yield s
     s.stop()
+
+
+@pytest.fixture
+def jobs_fired(spark):
+    """``jobs_fired(group, fn)`` runs ``fn`` under the Spark job group
+    ``group`` and returns its result and the number of jobs it fired."""
+
+    def run(group, fn):
+        sc = spark.sparkContext
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setJobGroup("", "")
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

@@ -151,16 +151,16 @@ def test_ivf_assign_deterministic_tiebreak(spark):
 
 def test_ensure_parallelism_guard_decisions(spark):
     """The parallelism guard must (a) repartition any under-parallel plan
-    up to the session's shuffle parallelism — round 13 removed the old
-    4MB size floor, bytes being the wrong proxy for compute-dense vector
-    work (the floor kept sub-4MB corpora serialized on one core) — and
-    (b) leave an already-parallel plan untouched, which is the 100 TB
-    case (more splits than cores) where the guard must stay a no-op."""
+    up to the session's task slots (``defaultParallelism``) — with no size
+    floor, bytes being the wrong proxy for compute-dense vector work (a
+    floor kept sub-4MB corpora serialized on one core) — and (b) leave an
+    already-parallel plan untouched, which is the 100 TB case (more splits
+    than cores) where the guard must stay a no-op."""
     import pyspark.sql.functions as F
 
     from create_proposals_using_vector_db_public_spark.operators import knn
 
-    shuffle_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    slots = spark.sparkContext.defaultParallelism
     # single-split input -> the guard adds the round-robin exchange even
     # though the plan is tiny in bytes. Assert on the LOGICAL node the
     # guard adds ('Repartition'): an Exchange only exists in the physical
@@ -171,9 +171,9 @@ def test_ensure_parallelism_guard_decisions(spark):
     )
     forced = knn.ensure_parallelism(narrow)
     fplan = forced._jdf.queryExecution().optimizedPlan().toString()
-    assert "Repartition" in fplan, fplan
-    # already at (or above) the session's shuffle parallelism -> no-op
-    wide = spark.range(0, 1000, 1, shuffle_n).select(
+    assert f"Repartition {slots}, true" in fplan, fplan
+    # already at (or above) the session's task slots -> no-op
+    wide = spark.range(0, 1000, 1, slots).select(
         F.col("id").alias("vec_id"), F.array(F.lit(1.0)).alias("embedding")
     )
     guarded = knn.ensure_parallelism(wide)
@@ -183,6 +183,48 @@ def test_ensure_parallelism_guard_decisions(spark):
     for df in (wide, spark.range(0, 100000, 1, 2).toDF("id")):
         plan_n = int(df._jdf.queryExecution().toRdd().getNumPartitions())
         assert plan_n == df.rdd.getNumPartitions()
+
+
+def test_ensure_parallelism_targets_task_slots_not_shuffle_partitions(spark):
+    """The guard sizes its round-robin repartition by the cores that run
+    tasks, not by ``spark.sql.shuffle.partitions``: with 32 shuffle
+    partitions on a 4-slot session, a 1-split corpus becomes 4 tasks, not
+    32 tiny ones. The keyed form stands in for the downstream shuffle on
+    its key, so it takes the shuffle's count (32) and a join against
+    another side shuffled on that key needs no further exchange. A plan
+    that already fills every slot is left alone either way."""
+    import pyspark.sql.functions as F
+
+    from create_proposals_using_vector_db_public_spark.operators import knn
+
+    def n_parts(df):
+        return int(df._jdf.queryExecution().toRdd().getNumPartitions())
+
+    slots = spark.sparkContext.defaultParallelism
+    confs = {"spark.sql.shuffle.partitions": "32",
+             # a shuffled join, so co-partitioning decides its exchanges
+             "spark.sql.autoBroadcastJoinThreshold": "-1"}
+    old = {k: spark.conf.get(k) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        assert slots < 32
+        narrow = spark.range(0, 1000, 1, 1).toDF("vec_id")
+        assert n_parts(knn.ensure_parallelism(narrow)) == slots
+        keyed = knn.ensure_parallelism(narrow, key="vec_id")
+        assert n_parts(keyed) == 32
+        other = spark.range(0, 1000, 1, 3).toDF("vec_id").groupBy("vec_id").count()
+        joined = keyed.join(other, "vec_id")
+        joined = joined._jdf.queryExecution().executedPlan().toString()
+        # the guard's exchange and the aggregate's: none added for the join
+        assert joined.count("Exchange hashpartitioning") == 2, joined
+        full = spark.range(0, 1000, 1, slots).toDF("vec_id")
+        for key in (None, "vec_id"):
+            plan = knn.ensure_parallelism(full, key=key)._jdf.queryExecution()
+            assert "Repartition" not in plan.optimizedPlan().toString()
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
 
 
 def test_ensure_parallelism_probeless_degrades_observably(spark, caplog):

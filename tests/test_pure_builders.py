@@ -1,6 +1,6 @@
 """Plan builders are pure: building a query returns a lazy DataFrame, fires
-no Spark job beyond reading its tables' parquet schemas, and leaves no
-state behind — nothing in Spark's cache and nothing held at module level
+no Spark job — not even to read its tables' parquet schemas — and leaves no
+state behind: nothing in Spark's cache and nothing held at module level
 between calls."""
 
 import os
@@ -13,53 +13,37 @@ from create_proposals_using_vector_db_public_spark.plans import (
     graph_queries,
     selection_queries,
 )
-from create_proposals_using_vector_db_public_spark.sources import load_table
 
 SF = "/root/testdata/sf0.001"
 
-# query -> the parquet tables its builder reads
-_PURE = {
-    "q_pagerank": ("lineitem",),
-    "q_temperature_sample": ("documents",),
-}
-
-
-def _in_group(spark, group, fn):
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        return fn()
-    finally:
-        sc.setJobGroup("", "")
-
-
-def _jobs(spark, group) -> int:
-    return len(spark.sparkContext.statusTracker().getJobIdsForGroup(group))
+# graph and sampling builders, the batch kNN and MinHash dedup of the
+# search workload, and relational builders that only read tables
+_PURE = (
+    "q_pagerank",
+    "q_temperature_sample",
+    "q_knn_join",
+    "q_dedup_minhash",
+    "q_scan_filter",
+    "q_agg_basic",
+    "q_topk_per_group",
+    "q_cdc_apply",
+)
 
 
 @pytest.mark.skipif(not os.path.isdir(SF), reason="sf0.001 testdata absent")
-def test_builders_fire_no_jobs_and_keep_no_state(spark):
-    # the reference: what reading each table alone costs (one parquet
-    # schema job per spark.read.parquet)
-    for table in {t for ts in _PURE.values() for t in ts}:
-        _in_group(spark, f"pure-load-{table}",
-                  lambda: load_table(spark, SF, table))
-    built = {
-        name: _in_group(spark, f"pure-build-{name}",
-                        lambda: QUERIES[name](spark, SF))
-        for name in _PURE
-    }
+def test_builders_fire_no_jobs_and_keep_no_state(spark, jobs_fired):
+    built, fired = {}, {}
+    for name in _PURE:
+        built[name], fired[name] = jobs_fired(
+            f"pure-build-{name}", lambda: QUERIES[name](spark, SF)
+        )
+    assert not any(fired.values()), (
+        f"jobs fired while building: { {k: v for k, v in fired.items() if v} }"
+    )
     # executing the plans is allowed to run jobs, and must still leave no
     # cache entry behind
     for name, df in built.items():
         assert df.collect(), f"{name} returned no rows"
-    for name, tables in _PURE.items():
-        allowed = sum(_jobs(spark, f"pure-load-{t}") for t in tables)
-        fired = _jobs(spark, f"pure-build-{name}")
-        assert fired <= allowed, (
-            f"{name} fired {fired} jobs while building; reading its tables "
-            f"alone fires {allowed}"
-        )
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty(), (
         "a plan builder left a cached relation behind"
     )
